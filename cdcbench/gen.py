@@ -11,7 +11,6 @@ Event shape (the engine's WAL contract, ``etl_spark.sources.wal.EVENT_SCHEMA``):
 
 from __future__ import annotations
 
-import base64
 import os
 from dataclasses import dataclass
 
@@ -22,9 +21,15 @@ import pyarrow.parquet as pq
 N_REPOS = 50
 HOT_REPOS = 3          # 20% of keys live in repos 0-2
 HOT_SHARE = 0.2
+# Payload shape follows the engine's own generator
+# (etl_spark.cdc.generator.event_columns): lang is one of 4 values or
+# NULL 1 time in 20, and the body after the one-line header is a 64-hex
+# digest repeated to a uniform 64-4096 bytes (~2 KB on average, and as
+# compressible as that generator's bodies).
 LANGS = ["python", "rust", "go", "js"]
 EXTS = ["py", "rs", "go", "js"]
-BODY_MIN, BODY_MAX = 64, 1024   # payload bytes after the one-line header
+LANG_NULL_IN = 20
+BODY_MIN, BODY_MAX = 64, 4096
 TS0_US = 1_704_067_200_000_000  # 2024-01-01T00:00:00Z
 
 EVENT_SCHEMA = pa.schema([
@@ -60,24 +65,20 @@ class KeySpace:
             [f"src/m{(i * 7) % 97}/f{i}.{EXTS[e]}" for i, e in enumerate(ext)], dtype=object)
 
 
-def _pool(rng: np.random.Generator) -> str:
-    return base64.b64encode(rng.bytes(3 * (BODY_MAX + 4096) // 4 * 4)).decode()
-
-
-def events_table(rng, ks: KeySpace, pool: str, seq0: int, key_idx, op) -> pa.Table:
+def events_table(rng, ks: KeySpace, seq0: int, key_idx, op) -> pa.Table:
     """Rows for seq in [seq0, seq0 + len(key_idx)): payload, commit and
     lang drawn from ``rng``; deletes carry NULL content."""
     n = len(key_idx)
     seq = np.arange(seq0, seq0 + n, dtype=np.int64)
     commit = [c.hex() for c in np.frombuffer(rng.bytes(20 * n), dtype="S20")] if n else []
-    lang_pick = rng.integers(0, len(LANGS) + 1, n)   # the extra value means NULL
+    digest = [d.hex() for d in np.frombuffer(rng.bytes(32 * n), dtype="S32")] if n else []
+    lang_pick = rng.integers(0, LANG_NULL_IN, n)     # LANG_NULL_IN - 1 means NULL
     body_len = rng.integers(BODY_MIN, BODY_MAX + 1, n)
-    body_off = rng.integers(0, len(pool) - BODY_MAX, n)
+    reps = BODY_MAX // 64
     repo, path = ks.repo[key_idx], ks.path[key_idx]
     content = [
         None if op[i] == "delete" else
-        f"// {repo[i]}/{path[i]}@{commit[i]} seq={seq[i]}\n"
-        + pool[body_off[i]:body_off[i] + body_len[i]]
+        f"// {repo[i]}/{path[i]}@{commit[i]}\n" + (digest[i] * reps)[:body_len[i]]
         for i in range(n)
     ]
     return pa.table({
@@ -87,7 +88,8 @@ def events_table(rng, ks: KeySpace, pool: str, seq0: int, key_idx, op) -> pa.Tab
         "repo": pa.array(list(repo), pa.string()),
         "path": pa.array(list(path), pa.string()),
         "commit": pa.array(commit, pa.string()),
-        "lang": pa.array([None if p == len(LANGS) else LANGS[p] for p in lang_pick], pa.string()),
+        "lang": pa.array([None if p == LANG_NULL_IN - 1 else LANGS[p % len(LANGS)]
+                          for p in lang_pick], pa.string()),
         "content": pa.array(content, pa.string()),
     }, schema=EVENT_SCHEMA)
 
@@ -111,7 +113,6 @@ def write_inputs(out_dir: str, seed: int, shape: Shape) -> dict:
     pa.set_cpu_count(os.cpu_count() or 1)
     rng = np.random.default_rng(seed)
     ks = KeySpace(rng, shape.keys)
-    pool = _pool(rng)
     wal_dir, up_dir, dim_dir = (os.path.join(out_dir, d) for d in ("wal", "upserts", "dim"))
     for d in (wal_dir, up_dir, dim_dir):
         os.makedirs(d, exist_ok=True)
@@ -130,12 +131,12 @@ def write_inputs(out_dir: str, seed: int, shape: Shape) -> dict:
 
     boot = np.arange(shape.keys)
     wal.append(put(os.path.join(wal_dir, "wal-00000.parquet"),
-                   events_table(rng, ks, pool, 0, boot, np.full(shape.keys, "insert", object))))
+                   events_table(rng, ks, 0, boot, np.full(shape.keys, "insert", object))))
     seq = shape.keys
     for b in range(shape.batches):
         kidx = rng.integers(0, shape.keys, shape.batch_events)
         wal.append(put(os.path.join(wal_dir, f"wal-{b + 1:05d}.parquet"),
-                       events_table(rng, ks, pool, seq, kidx, change_ops(rng, shape.batch_events))))
+                       events_table(rng, ks, seq, kidx, change_ops(rng, shape.batch_events))))
         seq += shape.batch_events
     ups = []
     # upsert keys: a stride through the key space, so successive rounds
@@ -143,7 +144,7 @@ def write_inputs(out_dir: str, seed: int, shape: Shape) -> dict:
     for u in range(shape.upserts):
         k = np.array([(u * 7919 + seed) % shape.keys])
         ups.append(put(os.path.join(up_dir, f"u-{u:05d}.parquet"),
-                       events_table(rng, ks, pool, seq + u, k, np.array(["update"], object))))
+                       events_table(rng, ks, seq + u, k, np.array(["update"], object))))
     repos = sorted(set(ks.repo.tolist()))
     tiers = rng.integers(0, 3, len(repos))
     dim = pa.table({

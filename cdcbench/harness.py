@@ -132,31 +132,21 @@ def remove_tree(path: str) -> None:
     shutil.rmtree(path, ignore_errors=True)
 
 
-# A timed sample is disturbed when the hypervisor gave more than this
-# share of the machine's CPU time to other guests while it ran (host CPU
-# steal). On a shared host such samples run up to several times slower
-# for reasons outside the program, so medians leave them out while at
-# least half of a kind's samples are undisturbed.
-STEAL_SHARE = 0.05
-
-
 class Ops:
-    """Counts attempted/failed operations and keeps their timings, each
-    with the host CPU steal during it. A failing operation (exception
-    or failed check) is recorded with its traceback on stderr; the run
-    goes on."""
+    """Counts attempted/failed operations and keeps their timings. A
+    failing operation (exception or failed check) is recorded with its
+    traceback on stderr; the run goes on."""
 
     def __init__(self):
         self.attempted = 0
         self.failed = 0
         self.checks_failed: list[str] = []
         self.times: dict[str, list[float]] = {}
-        self.steal: dict[str, list[float]] = {}
 
     def run(self, kind: str, fn, *args, **kw):
         """Time ``fn``; return (ok, result). Timings of failed calls are
         not kept."""
-        t0, s0 = time.perf_counter(), steal_s()
+        t0 = time.perf_counter()
         try:
             out = fn(*args, **kw)
         except Exception:
@@ -165,13 +155,12 @@ class Ops:
             print(f"[cdcbench] operation {kind} failed:", file=sys.stderr)
             traceback.print_exc()
             return False, None
-        self.record(kind, time.perf_counter() - t0, steal_s() - s0)
+        self.record(kind, time.perf_counter() - t0)
         return True, out
 
-    def record(self, kind: str, seconds: float, steal: float) -> None:
+    def record(self, kind: str, seconds: float) -> None:
         self.attempted += 1
         self.times.setdefault(kind, []).append(seconds)
-        self.steal.setdefault(kind, []).append(steal)
 
     def fail(self, kind: str, n: int = 1) -> None:
         self.attempted += n
@@ -186,13 +175,6 @@ class Ops:
             print(f"[cdcbench] check {name} FAILED {detail}", file=sys.stderr)
         return ok
 
-    def disturbed(self, kind: str) -> list[bool]:
-        ncpu = os.cpu_count() or 1
-        return [st > STEAL_SHARE * ncpu * t
-                for t, st in zip(self.times.get(kind, []), self.steal.get(kind, []))]
-
     def median(self, kind: str) -> float:
-        xs = self.times.get(kind) or []
-        clean = [t for t, bad in zip(xs, self.disturbed(kind)) if not bad]
-        use = clean if 2 * len(clean) >= len(xs) else xs
-        return statistics.median(use) if use else float("nan")
+        xs = self.times.get(kind)
+        return statistics.median(xs) if xs else float("nan")

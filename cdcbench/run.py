@@ -65,8 +65,6 @@ def main(argv=None) -> int:
         workloads.WORKLOADS[args.workload](run)
         harness.log(t_proc0, "timings: " + json.dumps(
             {k: [round(x, 3) for x in v] for k, v in run.ops.times.items()}))
-        harness.log(t_proc0, "samples disturbed by host CPU steal: " + json.dumps(
-            {k: sum(run.ops.disturbed(k)) for k in run.ops.times}))
         harness.stop_spark(spark)
         spark = None
         harness.log(t_proc0, f"spark stopped; cpu steal during run {harness.steal_s() - steal0:.2f}s")

@@ -27,21 +27,24 @@ from spans import Tracer
 
 N_BUCKETS = 16
 TABLE_COLS = ["repo", "path", "commit", "lang", "content", "content_sha256"]
-SCANS = 8          # full snapshot read + group-by, after ingest (after one untimed)
-POINT_READS = 2    # read_keys of the changed key per round
 
 # Steady-state work per run is a fixed count of operations, so a faster
-# engine finishes the same work sooner. Per 15 s of --seconds (measured
-# on the reference host, README) the stream times one maintenance cycle
-# of ``maintain_every`` epochs and three tail upserts, the batch workload
-# three apply_batch calls and two propagation rounds. The counts are
-# small because every run starts a cold JVM whose start and first-use
-# compilation take 20-30 s before any timed work, and a full agreement
-# check is 48 runs. The bootstrap batch is the batch workload's only
-# warm-up batch: a second one did not make the timed batches steadier.
-STREAM = {"keys": 12_000, "batch_events": 8_000, "warm": 3, "maintain_every": 4,
-          "cycles": 1, "upserts": 3}
-BATCH = {"keys": 4_000, "batch_events": 8_000, "batches": 3, "rounds": 2}
+# engine finishes the same work sooner. Per 15 s of --seconds the stream
+# times two maintenance cycles (six epochs, two of them compacting)
+# and six tail rounds (one-row upsert, read_keys, scan) after one
+# warm-up round; the batch workload times three apply_batch calls after
+# one warm-up change batch, and three propagation rounds with four
+# (read_keys, scan) pairs each. Each timed operation is as small as the
+# engine's fixed per-commit cost allows (a 2k-event apply_batch costs
+# about what a 1k-event one does), and the counts are what fits the run
+# budget: every run starts a cold JVM whose start and first-use
+# compilation take 20-25 s, a propagation round costs ~6 s, and a full
+# agreement check is 48 runs that must finish within 3420 s (README,
+# "Sizing").
+STREAM = {"keys": 4_000, "batch_events": 2_000, "warm": 2, "maintain_every": 3,
+          "cycles": 2, "rounds": 6}
+BATCH = {"keys": 4_000, "batch_events": 2_000, "warm": 1, "batches": 3, "rounds": 3,
+         "reads": 4}
 
 
 def _per_15s(seconds: int, count: int) -> int:
@@ -93,37 +96,8 @@ def _upsert_row(path: str) -> dict:
     return row
 
 
-def _point_round(run: Run, upsert_file: str, target, views: list, reader) -> None:
-    """One small upsert into ``target`` via ``LakeTable.merge_cdc``, then
-    each derived-view sync in ``views``, then ``read_keys`` of the
-    changed key on ``reader``. Records ``change_visible`` (upsert start
-    to last view committed), ``upsert`` (its merge alone) and
-    ``point_read``, and checks the read returns the row just written."""
-    row = _upsert_row(upsert_file)
-    staged = _events(run.spark, upsert_file).drop("ts")
-    t0, s0 = time.perf_counter(), harness.steal_s()
-    ok, _ = run.ops.run("upsert", target.merge_cdc, staged, epoch=f"u{row['seq']}")
-    for fn in views:
-        ok = ok and run.ops.run("sync", fn)[0]
-    if not ok:
-        return
-    run.ops.record("change_visible", time.perf_counter() - t0, harness.steal_s() - s0)
-
-    def point_read():
-        with run.tracer.span("lake.table.read_keys"):
-            return reader.read_keys([(row["repo"], row["path"])]).select(
-                "commit", "content_sha256").collect()
-
-    for _ in range(POINT_READS):
-        ok, got = run.ops.run("point_read", point_read)
-        if ok:
-            run.ops.check("read_keys_returns_written_row",
-                          len(got) == 1 and got[0]["commit"] == row["commit"]
-                          and got[0]["content_sha256"] == row["sha"],
-                          f"{row['repo']}/{row['path']}: {got}")
-
-
-def _scans(run: Run, tbl) -> None:
+def _scan_fn(run: Run, tbl):
+    """Full snapshot read + group-by ``lang`` of ``tbl``."""
     from pyspark.sql import functions as F
 
     def scan():
@@ -131,10 +105,45 @@ def _scans(run: Run, tbl) -> None:
             return tbl.read().groupBy("lang").agg(
                 F.count(F.lit(1)).alias("n"),
                 F.sum(F.length("content")).alias("bytes")).collect()
+    return scan
 
-    run.ops.run("warm", scan)   # the first scan of a table compiles its plan
-    for _ in range(SCANS):
-        run.ops.run("scan", scan)
+
+def _point_round(run: Run, upsert_file: str, target, views: list, reader, scan,
+                 reads: int, timed: bool = True) -> None:
+    """One small upsert into ``target`` via ``LakeTable.merge_cdc``, then
+    each derived-view sync in ``views``; then ``reads`` times a
+    ``read_keys`` of the changed key on ``reader``, each followed by one
+    full scan of ``target``. Records ``change_visible`` (upsert start to
+    last view committed), ``upsert``, ``sync``, ``point_read`` and
+    ``scan``, and checks every read returns the row just written. The probes run inside the rounds
+    so that each kind's samples spread over the whole tail of the run
+    and a short burst of host load touches few of them. An untimed
+    (warm-up) round records its operations as ``warm``."""
+    row = _upsert_row(upsert_file)
+    staged = _events(run.spark, upsert_file).drop("ts")
+    t0 = time.perf_counter()
+    ok, _ = run.ops.run("upsert" if timed else "warm", target.merge_cdc, staged,
+                        epoch=f"u{row['seq']}")
+    for fn in views:
+        ok = ok and run.ops.run("sync" if timed else "warm", fn)[0]
+    if not ok:
+        return
+    if timed:
+        run.ops.record("change_visible", time.perf_counter() - t0)
+
+    def point_read():
+        with run.tracer.span("lake.table.read_keys"):
+            return reader.read_keys([(row["repo"], row["path"])]).select(
+                "commit", "content_sha256").collect()
+
+    for _ in range(reads):
+        ok, got = run.ops.run("point_read" if timed else "warm", point_read)
+        if ok:
+            run.ops.check("read_keys_returns_written_row",
+                          len(got) == 1 and got[0]["commit"] == row["commit"]
+                          and got[0]["content_sha256"] == row["sha"],
+                          f"{row['repo']}/{row['path']}: {got}")
+        run.ops.run("scan" if timed else "warm", scan)
 
 
 def _final_checks(run: Run, tbl, files: list[str]) -> tuple[int, dict]:
@@ -162,21 +171,14 @@ def _finish_metrics(run: Run, events: int, window_s: float, commit_kind: str) ->
     run.layer_extra["trace.change_visible_s"] = (m["change_visible_s"], "s")
 
 
-def _warm_point_read(run: Run, tbl, upsert_file: str) -> None:
-    """One untimed ``read_keys``: the first of a JVM compiles its plan
-    and would be the slowest sample by far."""
-    key = _upsert_row(upsert_file)
-    run.ops.run("warm", lambda: tbl.read_keys([(key["repo"], key["path"])]).collect())
-
-
 def _tail(run: Run, tbl, upserts: list[str]) -> None:
-    """Point upserts + reads on ``tbl`` itself, then the scans."""
-    run.log("tail: upserts and point reads")
-    _warm_point_read(run, tbl, upserts[0])
-    for u in upserts:
-        _point_round(run, u, tbl, [], tbl)
-    run.log("tail: scans")
-    _scans(run, tbl)
+    """Point-change rounds on ``tbl`` itself, one read and one scan in
+    each; the first round warms up (the first one-row merge, read and
+    scan of a JVM compile their plans) and is not timed."""
+    run.log("tail: upserts, point reads and scans")
+    scan = _scan_fn(run, tbl)
+    for i, u in enumerate(upserts):
+        _point_round(run, u, tbl, [], tbl, scan, reads=1, timed=i > 0)
     run.log("tail: oracle")
 
 
@@ -194,13 +196,13 @@ def stream_mor_drain(run: Run) -> None:
     p, spark, tracer = STREAM, run.spark, run.tracer
     cycle = p["maintain_every"]
     timed = cycle * _per_15s(run.seconds, p["cycles"])
-    upserts = _per_15s(run.seconds, p["upserts"])
+    upserts = 1 + _per_15s(run.seconds, p["rounds"])      # + one warm-up round
     shape = gen.Shape(p["keys"], p["warm"] + timed, p["batch_events"], upserts)
     inp = gen.write_inputs(run.path("in"), run.seed, shape)
     run.log(f"inputs written: {shape}")
     tbl = _table(spark, run.path("mor"), "mor")
     first_timed = 1 + p["warm"]
-    epochs: list[tuple[int, float, float, float]] = []   # epoch, start, end, steal
+    epochs: list[tuple[int, float, float]] = []   # epoch, start, end
     depth: list[int] = []
 
     class TimedStream(CdcStream):
@@ -210,10 +212,10 @@ def stream_mor_drain(run: Run) -> None:
             spark.sparkContext.setJobGroup(f"cdcbench.epoch.{epoch}", "process_batch")
             if epoch == first_timed and tracer.clock_start is None:
                 run.start_clock()
-            t0, s0 = time.perf_counter(), harness.steal_s()
+            t0 = time.perf_counter()
             with tracer.span("streaming.driver.process_batch"):
                 out = super().process_batch(batch, epoch)
-            epochs.append((epoch, t0, time.perf_counter(), harness.steal_s() - s0))
+            epochs.append((epoch, t0, time.perf_counter()))
             if tracer.enabled and epoch >= first_timed:
                 depth.append(len(self.table.manifest().get("deltas", [])))
             return out
@@ -225,7 +227,7 @@ def stream_mor_drain(run: Run) -> None:
                  schema=EVENT_SCHEMA, max_files_per_trigger=1)
     done = [e for e in epochs if e[0] >= first_timed]
     for e in done:
-        run.ops.record("epoch", e[2] - e[1], e[3])
+        run.ops.record("epoch", e[2] - e[1])
     if len(done) < timed:
         run.ops.fail("epoch", timed - len(done))
     if tracer.clock_start is None:
@@ -235,7 +237,8 @@ def stream_mor_drain(run: Run) -> None:
         run.layer_extra["lake.table.delta_depth"] = (statistics.mean(depth), "count")
 
     # lineage: row counts sum to the drained events, seq ranges tile [0, N)
-    run.log(f"drain done: {len(done)} timed epochs in {window:.2f}s")
+    run.log(f"drain done: {len(done)} timed epochs in {window:.2f}s; every epoch (s): "
+            + " ".join(f"{e}:{t1 - t0:.2f}" for e, t0, t1 in epochs))
     lin = stream.read_lineage(spark).collect()
     probs = oracle.check_lineage(lin, inp["wal_events"])
     run.ops.check("lineage_tiles_drained_seqs", not probs, "; ".join(probs))
@@ -275,11 +278,12 @@ def stream_mor_drain(run: Run) -> None:
 def batch_cow_auto(run: Run) -> None:
     """Equal ``apply_batch`` calls into a COW table with the CLI defaults
     ``salted="auto", resolve="auto"`` (both probes run every call); the
-    bootstrap batch runs before the clock. Then the table
+    bootstrap batch and ``warm`` change batches run before the clock. Then the table
     feeds a mirror (``sync``), a per-lang aggregate (``sync_agg``) and a
     join view (``sync_join`` against a repo dimension), bootstrapped
     untimed; each timed propagation round is one single-row upsert, the
-    three syncs, and ``read_keys`` of the changed key on the mirror."""
+    three syncs, then ``read_keys`` of the changed key on the mirror and
+    scans of the source, interleaved."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -290,19 +294,21 @@ def batch_cow_auto(run: Run) -> None:
     p, spark = BATCH, run.spark
     timed = _per_15s(run.seconds, p["batches"])
     rounds = _per_15s(run.seconds, p["rounds"])
-    shape = gen.Shape(p["keys"], timed, p["batch_events"], rounds)
+    shape = gen.Shape(p["keys"], p["warm"] + timed, p["batch_events"], rounds)
     inp = gen.write_inputs(run.path("in"), run.seed, shape)
     run.log(f"inputs written: {shape}")
     src = _table(spark, run.path("src"), "cow")
+    first_timed = 1 + p["warm"]
 
     def apply(i: int):
         return R.apply_batch(src, _events(spark, inp["wal"][i]), epoch=i,
                              salted="auto", resolve="auto")
 
-    run.ops.run("warm", apply, 0)
+    for i in range(first_timed):
+        run.ops.run("warm", apply, i)
     run.start_clock()
     run.log("clock started")
-    for i in range(1, len(inp["wal"])):
+    for i in range(first_timed, len(inp["wal"])):
         run.ops.run("apply_batch", apply, i)
     window = time.perf_counter() - run.tracer.clock_start
     n_ok = len(run.ops.times.get("apply_batch", []))
@@ -334,13 +340,14 @@ def batch_cow_auto(run: Run) -> None:
     for fn in views:
         run.ops.run("bootstrap_sync", fn)
     run.log("views bootstrapped; propagation rounds")
-    _warm_point_read(run, mirror, inp["upserts"][0])
+    scan = _scan_fn(run, src)
+    first = _upsert_row(inp["upserts"][0])
+    # the first read_keys and scan of a JVM compile their plans
+    run.ops.run("warm", lambda: mirror.read_keys([(first["repo"], first["path"])]).collect())
+    run.ops.run("warm", scan)
     for u in inp["upserts"]:
-        _point_round(run, u, src, views, mirror)
-
-    run.log("rounds done; scans")
-    _scans(run, src)
-    run.log("oracle")
+        _point_round(run, u, src, views, mirror, scan, reads=p["reads"])
+    run.log("rounds done; oracle")
     rows, want = _final_checks(run, src, inp["wal"] + inp["upserts"])
     probs = oracle.compare_state(oracle.table_state(mirror.read()), want)
     run.ops.check("mirror_matches_duckdb_oracle", not probs, "; ".join(probs))
