@@ -441,8 +441,8 @@ def wap_bench(spark, root: str, n_events: int) -> dict:
 
 
 def constraint_overhead_bench(spark, root: str, n_events: int) -> dict:
-    """CHECK-constraint enforcement rides the post-write stats scan
-    (lake/table.py), so a constrained merge should cost ~the same as
+    """CHECK-constraint enforcement rides an ``observe`` on the bucket
+    write (lake/table.py), so a constrained merge should cost ~the same as
     an unconstrained one — measure the claim instead of asserting it."""
     from pyspark.sql import types as T
 

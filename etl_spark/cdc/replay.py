@@ -338,6 +338,23 @@ def batch_digest(staged: DataFrame, seq_col: str = "seq") -> str:
     return format((s or 0) & 0xFFFFFFFFFFFFFFFF, "016x")
 
 
+def append_only(table, salted, resolve) -> bool:
+    """Is ``table`` an append-only fact table? Such a table takes every
+    event AS a row — any latest-wins pre-shrink (salted or keys-first)
+    would silently drop facts, so both knobs are inert there (the
+    append write path's one repartition has no reduce-side sort to
+    protect), callers bypass every dedup, and explicitly asking for
+    one raises."""
+    if table.manifest().get("write_mode", "cow") != "append":
+        return False
+    if salted is True or resolve == "keys_first":
+        raise ValueError(
+            "append-only tables take every event as a row; "
+            "salted/keys_first dedup would drop facts"
+        )
+    return True
+
+
 def apply_batch(
     table,
     events: DataFrame,
@@ -388,18 +405,8 @@ def apply_batch(
     fail-fast single-writer behavior."""
     from etl_spark.lake.table import with_conflict_retry
 
-    # append-only fact tables take every event AS a row — any
-    # latest-wins pre-shrink (salted or keys-first) would silently
-    # drop facts, so both knobs are inert there (the append write
-    # path's one repartition has no reduce-side sort to protect),
-    # and the staged path below (which dedups) is bypassed entirely
-    append_mode = table.manifest().get("write_mode", "cow") == "append"
+    append_mode = append_only(table, salted, resolve)
     if append_mode:
-        if salted is True or resolve == "keys_first":
-            raise ValueError(
-                "append-only tables take every event as a row; "
-                "salted/keys_first dedup would drop facts"
-            )
         salted, resolve = False, "fused"
 
     decision = None

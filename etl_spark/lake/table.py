@@ -11,7 +11,7 @@ needs:
   never see a partial commit.
 - **copy-on-write buckets**: rows are hash-bucketed by the merge key
   (``pmod(murmur3_hash(*keys), n_buckets)`` — deliberately Spark's own
-  HashPartitioning formula, see _bucket_expr). A MERGE rewrites only
+  HashPartitioning formula, see _bucket_of). A MERGE rewrites only
   the buckets the staged batch touches; untouched buckets are carried
   forward by manifest pointer. At 100 TB / thousands of buckets, a
   batch touching k buckets costs O(k * bucket_size), not O(table).
@@ -69,7 +69,8 @@ def _max_opt(a, b):
 # `_write_buckets`/`_merge_mor` already sort each bucket's rows by the
 # table's ``sort_cols`` before writing, so per-FILE min/max of those
 # columns are tight, near-disjoint ranges and cost nothing extra to
-# collect (they ride the existing post-write stats scan). The manifest
+# collect (they come from the written files' parquet footers, see
+# _footer_stats). The manifest
 # records them per file; ``read(filters=...)`` then prunes whole files
 # BEFORE the scan — the lever bucket pruning (key-only) cannot provide
 # for non-key predicates, and at 100 TB the difference between "open
@@ -174,6 +175,121 @@ def _range_may_match(rng, op, v) -> bool:
     except TypeError:
         return True
     return True
+
+
+def _bucket_of(cols, n_buckets: int):
+    # pmod(murmur3, n) — EXACTLY Spark's HashPartitioning formula,
+    # so repartition(n_buckets, *keys) physically routes each row
+    # to the partition that IS its bucket: the merge's one shuffle
+    # doubles as the bucketed-write placement (no second shuffle).
+    return F.pmod(F.hash(*cols), F.lit(n_buckets))
+
+
+def _column_range(pf, col: str, dtype) -> tuple:
+    """(min, max, non-null count) of one column of one parquet file in
+    Spark's SQL order; min/max are None when no value is non-null.
+    Footer statistics answer when every row group carries them. The
+    column itself is read where they cannot stand in for Spark's
+    order: floats (Spark sorts NaN above every number, parquet
+    writers disagree), timestamps (Spark writes INT96, which has no
+    statistics; returned as epoch seconds) and row groups whose writer
+    dropped min/max (oversized strings)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    md = pf.metadata
+    if not isinstance(dtype, (T.FloatType, T.DoubleType, T.TimestampType)):
+        j = [md.schema.column(i).path for i in range(md.num_columns)].index(col)
+        mn = mx = None
+        nn = 0
+        for i in range(md.num_row_groups):
+            rg = md.row_group(i)
+            st = rg.column(j).statistics
+            if st is None or not st.has_null_count:
+                break
+            n = rg.num_rows - st.null_count
+            if n and not st.has_min_max:
+                break
+            if n:
+                nn += n
+                mn = st.min if mn is None else min(mn, st.min)
+                mx = st.max if mx is None else max(mx, st.max)
+        else:
+            return mn, mx, nn
+    arr = pf.read(columns=[col]).column(0)
+    nn = len(arr) - arr.null_count
+    nan = False
+    if isinstance(dtype, T.TimestampType):
+        arr = arr.cast(pa.timestamp("us", tz=arr.type.tz)).cast(pa.int64())
+    elif isinstance(dtype, (T.FloatType, T.DoubleType)):
+        isnan = pc.is_nan(arr)
+        nan = bool(pc.any(isnan).as_py())
+        arr = arr.filter(pc.invert(isnan))
+    mm = pc.min_max(arr)
+    mn, mx = mm["min"].as_py(), mm["max"].as_py()
+    if nan:
+        mx = float("nan")
+        mn = mx if mn is None else mn
+    if isinstance(dtype, T.TimestampType) and mn is not None:
+        mn, mx = (s + us / 1e6 for s, us in (divmod(mn, 10**6), divmod(mx, 10**6)))
+    return mn, mx, nn
+
+
+def _footer_stats(data_dir: str, schema: T.StructType, seq_col: str, sort_cols: list[str]) -> dict:
+    """Manifest entries for a bucket-partitioned write, from the
+    written files' parquet footers — no Spark job. Per bucket: path,
+    live ``rows``, ``tombstones``, ``min_seq``/``max_seq`` and
+    ``max_cv`` (when some value is non-null), and with statable
+    ``sort_cols`` a ``files`` list of per-file rows and min/max. A
+    file's ``_deleted`` min/max says whether it is all live or all
+    tombstones; only mixed files have that one column read."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    stat_cols = [c for c in sort_cols if isinstance(schema[c].dataType, _STATS_TYPES)]
+    out = {}
+    for d in os.listdir(data_dir):
+        if not d.startswith(f"{_BUCKET}="):
+            continue
+        ent: dict = {"path": os.path.join(data_dir, d), "rows": 0, "tombstones": 0}
+        files = []
+        for fn in sorted(os.listdir(ent["path"])):
+            if fn.startswith((".", "_")):
+                continue
+            # INT96 as microseconds: as nanoseconds it overflows outside
+            # the years 1677-2262, which Spark timestamps can hold
+            pf = pq.ParquetFile(os.path.join(ent["path"], fn), coerce_int96_timestamp_unit="us")
+            n = pf.metadata.num_rows
+            lo, hi, nn = _column_range(pf, _DELETED, T.BooleanType())
+            if hi is not True:
+                dead = 0
+            elif lo is True:
+                dead = nn
+            else:
+                dead = int(pc.sum(pf.read(columns=[_DELETED]).column(0)).as_py())
+            ent["rows"] += n - dead
+            ent["tombstones"] += dead
+            lo, hi, _ = _column_range(pf, seq_col, T.LongType())
+            if hi is not None:
+                ent["min_seq"] = min(ent.get("min_seq", lo), lo)
+                ent["max_seq"] = max(ent.get("max_seq", hi), hi)
+            _, hi, _ = _column_range(pf, _CV, T.LongType())
+            if hi is not None:
+                ent["max_cv"] = _max_opt(ent.get("max_cv"), hi)
+            if stat_cols:
+                fent: dict = {"name": fn, "rows": n}
+                st = {}
+                for c in stat_cols:
+                    lo, hi, _ = _column_range(pf, c, schema[c].dataType)
+                    if lo is not None:
+                        st[c] = [_stat_encode(lo), _stat_encode(hi)]
+                if st:
+                    fent["stats"] = st
+                files.append(fent)
+        if files:
+            ent["files"] = files
+        out[str(int(d.split("=")[1]))] = ent
+    return out
 
 
 class ConstraintViolationError(ValueError):
@@ -498,7 +614,7 @@ class LakeTable:
         ``constraints``: named CHECK expressions ({name: SQL boolean
         expr}) every LIVE row must satisfy (Delta CHECK-constraint
         analog; NULL satisfies, per SQL). Enforcement is FUSED into
-        the post-write stats scan every rewrite already does, so the
+        the write itself (one ``observe`` on the bucket write), so the
         happy path costs zero extra passes; a violating batch aborts
         before the manifest commit and the table is untouched. See
         ``add_constraint`` for constraining existing tables.
@@ -567,12 +683,10 @@ class LakeTable:
 
     # ---------- read ----------
 
-    def _bucket_expr(self, keys: list[str]):
-        # pmod(murmur3, n) — EXACTLY Spark's HashPartitioning formula,
-        # so repartition(n_buckets, *keys) physically routes each row
-        # to the partition that IS its bucket: the merge's one shuffle
-        # doubles as the bucketed-write placement (no second shuffle).
-        return F.pmod(F.hash(*[F.col(k) for k in keys]), F.lit(self.n_buckets))
+    def _bucket_expr(self, keys: list[str], m: dict | None = None):
+        """Bucket id of the named columns (see _bucket_of), under the
+        bucket count of snapshot ``m`` (default: the current one)."""
+        return _bucket_of([F.col(k) for k in keys], (m or self.manifest())["n_buckets"])
 
     def version_at(self, ts: float) -> int:
         """TIMESTAMP AS OF: the newest version whose commit time is
@@ -637,7 +751,16 @@ class LakeTable:
             version = self.resolve_tag(tag)
         elif as_of_ts is not None:
             version = self.version_at(as_of_ts)
-        m = self.manifest(version)
+        return self._scan(self.manifest(version), buckets, include_tombstones, filters)
+
+    def _scan(
+        self,
+        m: dict,
+        buckets: set[int] | None = None,
+        include_tombstones: bool = False,
+        filters: list[tuple] | None = None,
+    ) -> DataFrame:
+        """``read`` of the snapshot ``m`` (an already-loaded manifest)."""
         cur = T.StructType.fromJson(m["schemas"][m["current_schema_id"]])
         deltas = m.get("deltas", [])
         enc = None
@@ -769,32 +892,34 @@ class LakeTable:
     def read_keys(self, keys: list[tuple], pushdown_limit: int = 64) -> DataFrame:
         """Point lookup: read ONLY the buckets the given key tuples
         hash to, then filter to those keys — O(touched buckets), not
-        O(table). Bucket ids come from one tiny local job evaluating
-        the exact engine hash (pmod(murmur3)) over the literal keys,
-        so Python never re-implements Spark's hash.
+        O(table). Spark computes the bucket ids with the exact engine
+        hash (pmod(murmur3)), so Python never re-implements it.
 
-        Up to ``pushdown_limit`` keys, the filter is a LITERAL
+        Up to ``pushdown_limit`` keys, the bucket ids come from ONE
+        tiny job projecting the literal keys, each cast to its key
+        column's type (murmur3 hashes by type), over ``spark.range(1)``
+        and deduplicated in Python; the filter is a LITERAL
         OR-of-equalities instead of a semi join: Catalyst pushes it to
         the parquet scan, so row-group min/max stats AND the table's
         bloom filters (``bloom_cols``) skip data inside the touched
         buckets — the semi join form reads every row group. Larger key
-        sets fall back to the broadcast semi join (a giant pushed OR
-        would bloat the plan)."""
+        sets go through a DataFrame of the keys: a distinct bucket-id
+        probe, then the broadcast semi join (a giant pushed OR or
+        projection would bloat the plan)."""
+        m = self.manifest()
         if not keys:
-            return self.read().limit(0)
-        kcols = self.key_cols
-        schema = self.schema()
-        lit_df = self.spark.createDataFrame(
-            [tuple(k) for k in keys],
-            ", ".join(f"{k} {schema[k].dataType.simpleString()}" for k in kcols),
-        )
-        buckets = {
-            int(r["b"]) for r in
-            lit_df.select(self._bucket_expr(kcols).alias("b")).distinct().collect()
-        }
-        df = self.read(buckets=buckets)
+            return self._scan(m).limit(0)
+        kcols = m["key_cols"]
+        schema = T.StructType.fromJson(m["schemas"][m["current_schema_id"]])
+        types = [schema[k].dataType for k in kcols]
         if len(keys) <= pushdown_limit:
             import functools
+
+            ids = [
+                _bucket_of([F.lit(v).cast(t) for v, t in zip(k, types)], m["n_buckets"])
+                .alias(f"b{i}") for i, k in enumerate(keys)
+            ]
+            df = self._scan(m, buckets={int(b) for b in self.spark.range(1).select(*ids).first()})
 
             def tup(kt):
                 return functools.reduce(
@@ -803,8 +928,15 @@ class LakeTable:
                 )
 
             return df.filter(functools.reduce(lambda a, b: a | b, [tup(k) for k in keys]))
-        probe = lit_df.select(*kcols)
-        return df.join(F.broadcast(probe), kcols, "left_semi")
+        probe = self.spark.createDataFrame(
+            [tuple(k) for k in keys],
+            T.StructType([T.StructField(k, t, True) for k, t in zip(kcols, types)]),
+        )
+        buckets = {
+            int(r["b"]) for r in
+            probe.select(self._bucket_expr(kcols, m).alias("b")).distinct().collect()
+        }
+        return self._scan(m, buckets=buckets).join(F.broadcast(probe), kcols, "left_semi")
 
     def create_view(self, name: str | None = None, **read_kw) -> str:
         """Register this table as a Spark temp view (default name:
@@ -1002,7 +1134,7 @@ class LakeTable:
         EXISTING live rows in one aggregation (violations block the
         DDL — a constraint must never be born broken), then record the
         expression in a metadata-only commit. Every later merge /
-        compact / rebucket enforces it inside its stats pass."""
+        compact / rebucket enforces it on its write (``observe``)."""
         m = self.manifest()
         if name in m.get("constraints", {}):
             raise ValueError(f"constraint exists: {name}")
@@ -1124,10 +1256,21 @@ class LakeTable:
     # ---------- write paths ----------
 
     def _write_buckets(
-        self, df: DataFrame, version: int, schema: T.StructType, pre_partitioned: bool = False
+        self,
+        df: DataFrame,
+        version: int,
+        schema: T.StructType,
+        m: dict,
+        pre_partitioned: bool = False,
+        area: str = "data",
+        refuse_deletes: bool = False,
     ) -> dict:
-        """Write df (must contain _b) partitioned by bucket; return
-        {bucket: {path, rows}} with per-bucket row counts.
+        """Write df (must contain _b) partitioned by bucket under
+        ``area`` (``data``: base buckets, ``delta``: MOR deltas); return
+        {bucket: {path, rows, tombstones, ...}} from the written files'
+        parquet footers (_footer_stats) — no read-back scan. ``m`` is
+        the snapshot the caller works from: its n_buckets, sort_cols,
+        constraints and write options shape the write.
 
         Repartition by bucket BEFORE partitionBy: without it every
         input partition writes one file per bucket it touches
@@ -1135,9 +1278,17 @@ class LakeTable:
         32 cores slower than 8); with it each bucket is one file and
         file count is bounded by n_buckets regardless of parallelism.
         Callers whose df is already hash-partitioned on the key
-        columns (the merge path) pass pre_partitioned=True and skip
+        columns (the merge paths) pass pre_partitioned=True and skip
         the extra shuffle entirely (bucket id == partition id by
-        construction of _bucket_expr).
+        construction of _bucket_of). Partition == bucket either way,
+        so clustering by ``sort_cols`` is a per-bucket local sort.
+
+        CHECK constraints (a LIVE row violates when its expr is FALSE;
+        NULL passes, per SQL; tombstones are exempt) and, with
+        ``refuse_deletes``, the append-only no-deletes contract are
+        enforced from one ``observe`` on the write itself: the only
+        batch-wide figures a commit needs. A violating batch has its
+        files removed and aborts before the manifest commit.
 
         The directory is unique PER ATTEMPT (v{N}-{token}), not per
         version: optimistic concurrency is decided later by the
@@ -1147,139 +1298,49 @@ class LakeTable:
         files. With unique paths the loser's files are orphans
         (collected by expire_versions); the manifest records the real
         paths."""
-        data_dir = os.path.join(
-            self.root, "data", f"v{version}-{uuid.uuid4().hex[:8]}"
-        )
+        from pyspark.sql import Observation
+
+        data_dir = os.path.join(self.root, area, f"v{version}-{uuid.uuid4().hex[:8]}")
         ordered = [F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
         out_df = df.select(F.col(_BUCKET), *ordered)
         if not pre_partitioned:
-            out_df = out_df.repartition(self.n_buckets, F.col(_BUCKET))
-        # within-file clustering (see create's sort_cols): partition ==
-        # bucket on both paths here, so this is a per-bucket local sort
-        sort_cols = [c for c in self.manifest().get("sort_cols", [])
-                     if c in schema.names]
+            out_df = out_df.repartition(m["n_buckets"], F.col(_BUCKET))
+        sort_cols = [c for c in m.get("sort_cols", []) if c in schema.names]
         if sort_cols:
             out_df = out_df.sortWithinPartitions(_BUCKET, *sort_cols)
-        self._apply_write_options(out_df.write).partitionBy(_BUCKET).mode(
+        cons = list(m.get("constraints", {}).items())
+        dead = F.coalesce(F.col(_DELETED), F.lit(False))
+        checks = [
+            F.sum(((~F.coalesce(F.expr(e), F.lit(True))) & ~dead).cast("long")).alias(f"viol{i}")
+            for i, (_n, e) in enumerate(cons)
+        ]
+        if refuse_deletes:
+            checks.append(F.sum(dead.cast("long")).alias("n_del"))
+        obs = Observation() if checks else None
+        if obs is not None:
+            out_df = out_df.observe(obs, *checks)
+        self._apply_write_options(out_df.write, m).partitionBy(_BUCKET).mode(
             "overwrite"
         ).parquet(data_dir)
-        out = {}
-        for d in os.listdir(data_dir):
-            if d.startswith(f"{_BUCKET}="):
-                b = int(d.split("=")[1])
-                out[str(b)] = {"path": os.path.join(data_dir, d)}
-        # per-bucket stats: the write layout is partitioned by bucket,
-        # so the count-back scans ONLY the tombstone/seq/_cv columns +
-        # the partition value — not the payload. Besides live/tombstone
-        # counts it records min/max seq and max commit-version per
-        # bucket: data-skipping stats that let `read_since` and
-        # `changes_since` prune untouched buckets from the manifest
-        # alone (Iceberg column-stats pruning, reduced to the two
-        # columns the engine's own access patterns need).
-        #
-        # When the table clusters by sort_cols, the same scan ALSO
-        # aggregates per FILE (input_file_name) and records each file's
-        # min/max of the sort columns in the manifest — the rows are
-        # sorted within each file by construction, so these are tight
-        # ranges and `read(filters=...)` prunes files before the scan.
-        if out:
-            back = self.spark.read.parquet(data_dir)
-            dead = (
-                F.coalesce(F.col(_DELETED), F.lit(False))
-                if _DELETED in back.columns
-                else F.lit(False)
-            )
-            seq_col = self.seq_col
-            aggs = [
-                F.count(F.when(~F.col("d"), 1)).alias("live"),
-                F.count(F.when(F.col("d"), 1)).alias("dead"),
-            ]
-            sel = [F.col(_BUCKET).alias("b"), F.input_file_name().alias("f"),
-                   dead.alias("d")]
-            if seq_col in back.columns:
-                sel.append(F.col(seq_col).alias("__seq"))
-                aggs += [F.min("__seq").alias("mn"), F.max("__seq").alias("mx")]
-            if _CV in back.columns:
-                sel.append(F.col(_CV).alias("__cv"))
-                aggs.append(F.max("__cv").alias("cv"))
-            stat_cols = [
-                c for c in sort_cols
-                if c in back.columns and isinstance(back.schema[c].dataType, _STATS_TYPES)
-            ]
-            for i, c in enumerate(stat_cols):
-                sel.append(F.col(c).alias(f"__st{i}"))
-                aggs += [F.min(f"__st{i}").alias(f"st{i}mn"),
-                         F.max(f"__st{i}").alias(f"st{i}mx")]
-            # CHECK constraints ride the same scan (zero extra passes):
-            # a LIVE row violates when its expr is FALSE (NULL passes,
-            # per SQL); tombstones are exempt by construction
-            cons = list(self.manifest().get("constraints", {}).items())
-            for i, (_cname, cexpr) in enumerate(cons):
-                sel.append(
-                    ((~F.coalesce(F.expr(cexpr), F.lit(True))) & ~dead)
-                    .cast("long").alias(f"__viol{i}")
-                )
-                aggs.append(F.sum(f"__viol{i}").alias(f"viol{i}"))
-            per_file = back.select(*sel).groupBy("b", "f").agg(*aggs).collect()
-            counts: dict[int, dict] = {}
-            file_stats: dict[int, list[dict]] = {}
-            from urllib.parse import unquote, urlparse
-
-            for row in per_file:
-                r = row.asDict()
-                b = int(r["b"])
-                agg = counts.setdefault(b, {})
-                agg["live"] = agg.get("live", 0) + int(r["live"])
-                agg["dead"] = agg.get("dead", 0) + int(r["dead"])
-                if r.get("mx") is not None:
-                    agg["mn"] = min(agg["mn"], int(r["mn"])) if agg.get("mn") is not None else int(r["mn"])
-                    agg["mx"] = _max_opt(agg.get("mx"), int(r["mx"]))
-                if r.get("cv") is not None:
-                    agg["cv"] = _max_opt(agg.get("cv"), int(r["cv"]))
-                for i, (cname, _e) in enumerate(cons):
-                    agg[f"viol{i}"] = agg.get(f"viol{i}", 0) + int(r[f"viol{i}"] or 0)
-                if stat_cols:
-                    fent: dict = {
-                        "name": os.path.basename(unquote(urlparse(r["f"]).path)),
-                        "rows": int(r["live"]) + int(r["dead"]),
-                    }
-                    st = {}
-                    for i, c in enumerate(stat_cols):
-                        if r[f"st{i}mn"] is not None:
-                            st[c] = [_stat_encode(r[f"st{i}mn"]), _stat_encode(r[f"st{i}mx"])]
-                    if st:
-                        fent["stats"] = st
-                    file_stats.setdefault(b, []).append(fent)
-            violations = {
-                cname: n
-                for i, (cname, _e) in enumerate(cons)
-                if (n := sum(int(r.get(f"viol{i}") or 0) for r in counts.values()))
-            }
+        out = _footer_stats(data_dir, schema, m["seq_col"], sort_cols)
+        if obs is not None and out:  # no files: no rows, nothing to check
+            got = obs.get
+            violations = {n: got[f"viol{i}"] for i, (n, _e) in enumerate(cons) if got[f"viol{i}"]}
             if violations:
                 shutil.rmtree(data_dir, ignore_errors=True)
                 raise ConstraintViolationError(
                     f"CHECK constraint(s) violated, commit aborted: "
                     f"{violations} (rows per constraint)"
                 )
-        else:
-            counts = {}
-            file_stats = {}
-        for b, ent in out.items():
-            r = counts.get(int(b), {})
-            ent["rows"] = int(r.get("live", 0))
-            ent["tombstones"] = int(r.get("dead", 0))
-            if r.get("mx") is not None:
-                ent["min_seq"], ent["max_seq"] = int(r["mn"]), int(r["mx"])
-            if r.get("cv") is not None:
-                ent["max_cv"] = int(r["cv"])
-            if int(b) in file_stats:
-                ent["files"] = sorted(file_stats[int(b)], key=lambda fe: fe["name"])
+            if refuse_deletes and got["n_del"]:
+                shutil.rmtree(data_dir, ignore_errors=True)
+                raise ValueError(
+                    f"append-only table refuses deletes ({got['n_del']} delete "
+                    "events in batch); use write_mode=mor/cow for CDC keys"
+                )
         return out
 
-    def _bucket_keys_expr(self, schema: T.StructType):
-        return F.pmod(F.hash(*[F.col(k) for k in self.key_cols]), F.lit(self.n_buckets))
-
-    def _apply_write_options(self, writer):
+    def _apply_write_options(self, writer, m: dict):
         """Per-column parquet bloom filters for the manifest's
         ``bloom_cols`` — row-group skipping for point lookups — and
         ``target_file_rows``: cap rows per output file so one bucket
@@ -1291,7 +1352,6 @@ class LakeTable:
         multi-file buckets need no manifest change (Delta/Iceberg
         target-file-size analog, row-count-based because the engine
         never sees encoded bytes until after the write)."""
-        m = self.manifest()
         for c in m.get("bloom_cols", []):
             writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true")
         tfr = m.get("properties", {}).get("target_file_rows")
@@ -1338,7 +1398,9 @@ class LakeTable:
         if epoch is not None and str(epoch) in m.get("epochs", {}):
             return {"version": m["version"], "epoch": epoch, "skipped": True}
 
-        seq = self.seq_col
+        # m is this commit's one manifest snapshot: every helper below
+        # takes it instead of re-reading the current version
+        seq = m["seq_col"]
         internal = {seq, _DELETED, _CV}
         # --- schema evolution (add/widen) from the staged batch ---
         incoming_user = T.StructType(
@@ -1374,7 +1436,7 @@ class LakeTable:
         # discovery, then the resolve union), but discovery prunes to
         # the key columns only (a cheap scan), while caching the full
         # payload (content strings) measurably thrashes the heap.
-        src = src.select(*aligned).withColumn(_BUCKET, self._bucket_expr(self.key_cols))
+        src = src.select(*aligned).withColumn(_BUCKET, self._bucket_expr(m["key_cols"], m))
         # commit-version stamp: staged rows carry the version this merge
         # will commit; target rows keep theirs. The latest-wins window
         # keeps whole rows, so the winner's stamp rides along for free —
@@ -1458,13 +1520,13 @@ class LakeTable:
         bucket-partitioned DELTA — the target is never read, so a
         batch costs O(batch), not O(table). Readers resolve
         base+deltas by seq; ``compact()`` folds deltas into the base."""
-        seq = self.seq_col
+        seq, keys = m["seq_col"], m["key_cols"]
         append_only = m.get("write_mode", "cow") == "append"
-        part = src.repartition(self.n_buckets, *[F.col(k) for k in self.key_cols])
+        part = src.repartition(m["n_buckets"], *[F.col(k) for k in keys])
         # append mode skips the latest-wins resolve entirely: no sort,
         # no window — the one repartition (bucket placement/locality)
         # is the batch's only wide transform
-        kept = part if append_only else self._resolve_latest(part, seq, self.key_cols)
+        kept = part if append_only else self._resolve_latest(part, seq, keys)
         live = ~F.coalesce(F.col(_DELETED), F.lit(False))
         for dst, (fn, srccol) in m.get("derived", {}).items():
             if fn != "sha256":
@@ -1476,115 +1538,23 @@ class LakeTable:
                            F.sha2(F.col(srccol), 256)).otherwise(F.col(dst)),
                 )
         v = m["version"] + 1
-        # unique per attempt — same concurrency rationale as _write_buckets
-        delta_dir = os.path.join(self.root, "delta", f"v{v}-{uuid.uuid4().hex[:8]}")
-        ordered = [F.col(f.name).cast(f.dataType).alias(f.name) for f in new_schema.fields]
-        out_df = kept.select(F.col(_BUCKET), *ordered)
-        sort_cols = [c for c in m.get("sort_cols", []) if c in new_schema.names]
-        if sort_cols:
-            out_df = out_df.sortWithinPartitions(_BUCKET, *sort_cols)
-        self._apply_write_options(out_df.write).partitionBy(_BUCKET).mode(
-            "overwrite"
-        ).parquet(delta_dir)
-        out = {}
-        for d in os.listdir(delta_dir):
-            if d.startswith(f"{_BUCKET}="):
-                out[d.split("=")[1]] = {"path": os.path.join(delta_dir, d)}
-        # per-bucket seq stats from the just-written delta: a
-        # column-pruned scan of seq + the partition value only (keeps
-        # ingest O(batch)); every delta row is new, so max_cv == v.
-        # CHECK constraints ride this same scan (live rows only).
-        # With sort_cols the scan aggregates per FILE and records each
-        # file's sort-column min/max — in append mode (no read-time
-        # resolve) `read(filters=...)` prunes delta files with them.
-        if out:
-            back = self.spark.read.parquet(delta_dir)
-            dead = (
-                F.coalesce(F.col(_DELETED), F.lit(False))
-                if _DELETED in back.columns else F.lit(False)
-            )
-            sel = [F.col(_BUCKET).alias("b"), F.input_file_name().alias("f"),
-                   F.col(seq).alias("__seq")]
-            aggs = [F.min("__seq").alias("mn"), F.max("__seq").alias("mx"),
-                    F.count(F.lit(1)).alias("n")]
-            if append_only:
-                # append-only contract: deletes are refused, enforced
-                # in this same scan (a tombstone would silently vanish
-                # at read time otherwise — reads never resolve)
-                sel.append(dead.cast("long").alias("__del"))
-                aggs.append(F.sum("__del").alias("n_del"))
-            stat_cols = [
-                c for c in sort_cols
-                if c in back.columns and isinstance(back.schema[c].dataType, _STATS_TYPES)
-            ]
-            for i, c in enumerate(stat_cols):
-                sel.append(F.col(c).alias(f"__st{i}"))
-                aggs += [F.min(f"__st{i}").alias(f"st{i}mn"),
-                         F.max(f"__st{i}").alias(f"st{i}mx")]
-            cons = list(m.get("constraints", {}).items())
-            for i, (_cname, cexpr) in enumerate(cons):
-                sel.append(((~F.coalesce(F.expr(cexpr), F.lit(True))) & ~dead)
-                           .cast("long").alias(f"__viol{i}"))
-                aggs.append(F.sum(f"__viol{i}").alias(f"viol{i}"))
-            per_file = back.select(*sel).groupBy("b", "f").agg(*aggs).collect()
-            from urllib.parse import unquote, urlparse
-
-            stats: dict[int, dict] = {}
-            file_stats: dict[int, list[dict]] = {}
-            for row in per_file:
-                r = row.asDict()
-                b = int(r["b"])
-                agg = stats.setdefault(b, {})
-                agg["n"] = agg.get("n", 0) + int(r["n"])
-                if r.get("mx") is not None:
-                    agg["mn"] = min(agg["mn"], int(r["mn"])) if agg.get("mn") is not None else int(r["mn"])
-                    agg["mx"] = _max_opt(agg.get("mx"), int(r["mx"]))
-                if append_only:
-                    agg["n_del"] = agg.get("n_del", 0) + int(r["n_del"] or 0)
-                for i, (cname, _e) in enumerate(cons):
-                    agg[f"viol{i}"] = agg.get(f"viol{i}", 0) + int(r[f"viol{i}"] or 0)
-                if stat_cols:
-                    fent: dict = {
-                        "name": os.path.basename(unquote(urlparse(r["f"]).path)),
-                        "rows": int(r["n"]),
-                    }
-                    st = {}
-                    for i, c in enumerate(stat_cols):
-                        if r[f"st{i}mn"] is not None:
-                            st[c] = [_stat_encode(r[f"st{i}mn"]), _stat_encode(r[f"st{i}mx"])]
-                    if st:
-                        fent["stats"] = st
-                    file_stats.setdefault(b, []).append(fent)
-            violations = {
-                cname: n
-                for i, (cname, _e) in enumerate(cons)
-                if (n := sum(int(r.get(f"viol{i}") or 0) for r in stats.values()))
-            }
-            if violations:
-                shutil.rmtree(delta_dir, ignore_errors=True)
-                raise ConstraintViolationError(
-                    f"CHECK constraint(s) violated, commit aborted: "
-                    f"{violations} (rows per constraint)"
-                )
-            if append_only:
-                n_del = sum(int(r.get("n_del") or 0) for r in stats.values())
-                if n_del:
-                    shutil.rmtree(delta_dir, ignore_errors=True)
-                    raise ValueError(
-                        f"append-only table refuses deletes ({n_del} delete "
-                        "events in batch); use write_mode=mor/cow for CDC keys"
-                    )
-            for b, ent in out.items():
-                r = stats.get(int(b))
-                if r is not None and r.get("mx") is not None:
-                    ent["min_seq"], ent["max_seq"] = int(r["mn"]), int(r["mx"])
-                    ent["rows"] = int(r["n"])
-                ent["max_cv"] = v
-                if int(b) in file_stats:
-                    ent["files"] = sorted(file_stats[int(b)], key=lambda fe: fe["name"])
-            bmx = max((r["mx"] for r in stats.values() if r.get("mx") is not None), default=None)
-        else:
-            bmx = None
+        # per-bucket seq stats and (with sort_cols) per-file ranges come
+        # from the delta's footers, so ingest stays O(batch); in append
+        # mode (no read-time resolve) `read(filters=...)` prunes delta
+        # files with those ranges. The write refuses deletes in append
+        # mode: reads never resolve, so a tombstone would silently vanish.
+        out = self._write_buckets(
+            kept, v, new_schema, m=m, pre_partitioned=True, area="delta",
+            refuse_deletes=append_only,
+        )
+        # a delta entry counts every row it holds (tombstones included)
+        # and every delta row is new, so max_cv == v
+        for ent in out.values():
+            n = ent.pop("rows") + ent.pop("tombstones")
+            if "max_seq" in ent:
+                ent["rows"] = n
+            ent["max_cv"] = v
+        bmx = max((e["max_seq"] for e in out.values() if "max_seq" in e), default=None)
         m2 = {
             **m,
             "version": v,
@@ -1632,11 +1602,11 @@ class LakeTable:
                 return m0["version"]
             n0 = len(deltas0)
             touched = {int(b) for d in deltas0 for b in d["buckets"]}
-            resolved = self.read(
-                version=m0["version"], buckets=touched, include_tombstones=True
-            ).withColumn(_BUCKET, self._bucket_expr(self.key_cols))
+            resolved = self._scan(
+                m0, buckets=touched, include_tombstones=True
+            ).withColumn(_BUCKET, self._bucket_expr(m0["key_cols"], m0))
             schema = T.StructType.fromJson(m0["schemas"][m0["current_schema_id"]])
-            written = self._write_buckets(resolved, m0["version"] + 1, schema)
+            written = self._write_buckets(resolved, m0["version"] + 1, schema, m=m0)
             for ent in written.values():
                 ent["sid"] = m0["current_schema_id"]
             while True:
@@ -1662,7 +1632,7 @@ class LakeTable:
         )
 
     def _merge_resolve(self, m, src, new_schema, schemas, sid, epoch, extra_manifest) -> dict:
-        seq = self.seq_col
+        seq, keys = m["seq_col"], m["key_cols"]
         # one pruned scan discovers the dirty buckets AND the batch's
         # max seq (collect_set is bounded by n_buckets) — the manifest
         # tracks max_seq so upsert() never scans the table for it
@@ -1685,21 +1655,21 @@ class LakeTable:
         # Tombstones ride along: a delete winner stays as a hidden row
         # (carrying its seq) so older out-of-order events can't resurrect
         # the key; reads filter them out.
-        tgt_raw = self.read(buckets=dirty, include_tombstones=True)
+        tgt_raw = self._scan(m, buckets=dirty, include_tombstones=True)
         target = tgt_raw.select(
             *[
                 (F.col(f.name).cast(f.dataType) if f.name in tgt_raw.columns
                  else F.lit(None).cast(f.dataType)).alias(f.name)
                 for f in new_schema.fields
             ]
-        ).withColumn(_BUCKET, self._bucket_expr(self.key_cols))
+        ).withColumn(_BUCKET, self._bucket_expr(keys, m))
         all_cols = [f.name for f in new_schema.fields] + [_BUCKET]
         union = target.select(*all_cols).unionByName(src.select(*all_cols))
         # latest-wins via ONE key-hash shuffle + Tungsten binary sort:
         # repartition(n_buckets, keys) both clusters each key (so the
         # window needs no further exchange — HashPartitioning on the
         # keys satisfies its distribution) and places every row in the
-        # partition that IS its output bucket (see _bucket_expr), so
+        # partition that IS its output bucket (see _bucket_of), so
         # the bucketed write below shuffles nothing. Catalyst turns the
         # rn=1 filter into WindowGroupLimit (top-1 per key during the
         # sort). A max_by(struct) aggregate computes the same thing but
@@ -1715,8 +1685,8 @@ class LakeTable:
         # keys with the two-phase salted reduction.
         from pyspark.sql import Window
 
-        part = union.repartition(self.n_buckets, *[F.col(k) for k in self.key_cols])
-        w = Window.partitionBy(*self.key_cols).orderBy(F.desc(seq))
+        part = union.repartition(m["n_buckets"], *[F.col(k) for k in keys])
+        w = Window.partitionBy(*keys).orderBy(F.desc(seq))
         kept = (
             part.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
@@ -1740,7 +1710,7 @@ class LakeTable:
 
         # --- write only dirty buckets; carry the rest forward ---
         v = m["version"] + 1
-        written = self._write_buckets(kept, v, new_schema, pre_partitioned=True)
+        written = self._write_buckets(kept, v, new_schema, m=m, pre_partitioned=True)
         for ent in written.values():
             ent["sid"] = sid
         new_buckets = dict(m["buckets"])
@@ -1804,32 +1774,37 @@ class LakeTable:
 
     def delete_where(self, condition) -> int:
         """DELETE FROM ... WHERE — rewrite of affected buckets only."""
+        return self._rewrite_without(
+            ~F.coalesce(F.col(_DELETED), F.lit(False)) & condition, "delete_where")
+
+    def _rewrite_without(self, drop, note: str) -> int:
+        """Commit the table minus every physical row (tombstones
+        included) for which ``drop`` is TRUE, rewriting only the
+        buckets that hold such a row: one distinct bucket-id probe,
+        then the dirty buckets' rewrite."""
         if self.manifest().get("deltas"):
             self.compact()  # bucket-level rewrite needs a delta-free base
-        df = self.read()
-        matched = df.filter(condition)
+        m = self.manifest()
+        keys = m["key_cols"]
+        drop = F.coalesce(drop, F.lit(False))
         dirty = {
-            int(r["b"])
-            for r in matched.select(self._bucket_keys_expr(self.schema()).alias("b")).distinct().collect()
+            int(r["b"]) for r in
+            self._scan(m, include_tombstones=True).filter(drop)
+            .select(self._bucket_expr(keys, m).alias("b")).distinct().collect()
         }
         if not dirty:
-            return self.current_version()
-        m = self.manifest()
-        # keep tombstone rows and any live row where the predicate is not TRUE
-        keep = self.read(buckets=dirty, include_tombstones=True).filter(
-            F.coalesce(F.col(_DELETED), F.lit(False)) | ~F.coalesce(condition, F.lit(False))
-        )
+            return m["version"]
+        keep = self._scan(m, buckets=dirty, include_tombstones=True).filter(~drop)
         v = m["version"] + 1
-        schema = self.schema()
-        written = self._write_buckets(keep.withColumn(_BUCKET, self._bucket_expr(self.key_cols)), v, schema)
+        schema = T.StructType.fromJson(m["schemas"][m["current_schema_id"]])
+        written = self._write_buckets(
+            keep.withColumn(_BUCKET, self._bucket_expr(keys, m)), v, schema, m=m)
         for ent in written.values():
             ent["sid"] = m["current_schema_id"]
-        new_buckets = dict(m["buckets"])
-        for b in dirty:
-            new_buckets.pop(str(b), None)
+        new_buckets = {b: e for b, e in m["buckets"].items() if int(b) not in dirty}
         new_buckets.update(written)
         m2 = {**m, "version": v, "parent": m["version"], "buckets": new_buckets,
-              "committed_at": time.time()}
+              "committed_at": time.time(), "note": note}
         return self._commit(m2)
 
     def clone(self, dst_root: str, version: int | None = None) -> "LakeTable":
@@ -2329,56 +2304,22 @@ class LakeTable:
         """Atomically rewrite the table with a new bucket count — the
         scale knob as a table grows (more buckets => smaller COW
         rewrite units and more write parallelism). One full rewrite;
-        readers see old or new layout, never a mix (manifest flip)."""
+        readers see old or new layout, never a mix (manifest flip).
+        The write is the shared bucket write, so bloom_cols, sort_cols
+        clustering, per-file ranges and CHECK constraints survive it."""
         if self.manifest().get("deltas"):
             self.compact()  # fold deltas before changing the layout
         m = self.manifest()
-        schema = self.schema()
-        df = self.read(include_tombstones=True)
+        mn = {**m, "n_buckets": n_buckets}  # the new layout
+        schema = T.StructType.fromJson(m["schemas"][m["current_schema_id"]])
+        df = self._scan(m, include_tombstones=True).withColumn(
+            _BUCKET, self._bucket_expr(m["key_cols"], mn))
         v = m["version"] + 1
-        new_b = F.pmod(F.hash(*[F.col(k) for k in self.key_cols]), F.lit(n_buckets))
-        data_dir = os.path.join(self.root, "data", f"v{v}-{uuid.uuid4().hex[:8]}")
-        ordered = [F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
-        # _apply_write_options: bloom_cols must survive layout rewrites
-        # (a rebucket that dropped them would silently degrade point
-        # lookups until later merges happened to rewrite every bucket)
-        self._apply_write_options(
-            df.withColumn(_BUCKET, new_b).select(F.col(_BUCKET), *ordered)
-            .repartition(n_buckets, F.col(_BUCKET))
-            .write
-        ).partitionBy(_BUCKET).mode("overwrite").parquet(data_dir)
-        out = {}
-        for d in os.listdir(data_dir):
-            if d.startswith(f"{_BUCKET}="):
-                b = int(d.split("=")[1])
-                out[str(b)] = {"path": os.path.join(data_dir, d), "sid": m["current_schema_id"]}
-        if out:
-            back = self.spark.read.parquet(data_dir)
-            dead = F.coalesce(F.col(_DELETED), F.lit(False))
-            seq_col = self.seq_col
-            sel = [F.col(_BUCKET).alias("b"), dead.alias("d"),
-                   F.col(seq_col).alias("__seq")]
-            aggs = [
-                F.count(F.when(~F.col("d"), 1)).alias("live"),
-                F.count(F.when(F.col("d"), 1)).alias("dead"),
-                F.min("__seq").alias("mn"), F.max("__seq").alias("mx"),
-            ]
-            if _CV in back.columns:
-                sel.append(F.col(_CV).alias("__cv"))
-                aggs.append(F.max("__cv").alias("cv"))
-            counts = {
-                int(r["b"]): r.asDict()
-                for r in back.select(*sel).groupBy("b").agg(*aggs).collect()
-            }
-            for b, ent in out.items():
-                r = counts.get(int(b), {})
-                ent["rows"], ent["tombstones"] = int(r.get("live", 0)), int(r.get("dead", 0))
-                if r.get("mx") is not None:
-                    ent["min_seq"], ent["max_seq"] = int(r["mn"]), int(r["mx"])
-                if r.get("cv") is not None:
-                    ent["max_cv"] = int(r["cv"])
-        m2 = {**m, "version": v, "parent": m["version"], "n_buckets": n_buckets,
-              "buckets": out, "committed_at": time.time(), "note": f"rebucket->{n_buckets}"}
+        out = self._write_buckets(df, v, schema, m=mn)
+        for ent in out.values():
+            ent["sid"] = m["current_schema_id"]
+        m2 = {**mn, "version": v, "parent": m["version"], "buckets": out,
+              "committed_at": time.time(), "note": f"rebucket->{n_buckets}"}
         return self._commit(m2)
 
     def purge_tombstones(self, watermark_seq: int) -> int:
@@ -2389,39 +2330,12 @@ class LakeTable:
         event below ``watermark_seq`` can still arrive (e.g. the
         streaming checkpoint has passed it), they are dead weight and
         compaction may remove them. Rewrites only buckets that hold
-        purgeable tombstones."""
-        if self.manifest().get("deltas"):
-            self.compact()  # bucket-level rewrite needs a delta-free base
-        seq = self.seq_col
-        full = self.read(include_tombstones=True)
-        purgeable = full.filter(
-            F.coalesce(F.col(_DELETED), F.lit(False)) & (F.col(seq) <= watermark_seq)
+        purgeable tombstones; a tombstone with a NULL seq is never
+        purgeable."""
+        return self._rewrite_without(
+            F.col(_DELETED) & (F.col(self.seq_col) <= watermark_seq),
+            f"purge_tombstones<={watermark_seq}",
         )
-        dirty = {
-            int(r["b"])
-            for r in purgeable.select(self._bucket_keys_expr(self.schema()).alias("b"))
-            .distinct().collect()
-        }
-        if not dirty:
-            return self.current_version()
-        m = self.manifest()
-        keep = self.read(buckets=dirty, include_tombstones=True).filter(
-            ~(F.coalesce(F.col(_DELETED), F.lit(False)) & (F.col(seq) <= watermark_seq))
-        )
-        v = m["version"] + 1
-        schema = self.schema()
-        written = self._write_buckets(
-            keep.withColumn(_BUCKET, self._bucket_expr(self.key_cols)), v, schema
-        )
-        for ent in written.values():
-            ent["sid"] = m["current_schema_id"]
-        new_buckets = dict(m["buckets"])
-        for b in dirty:
-            new_buckets.pop(str(b), None)
-        new_buckets.update(written)
-        m2 = {**m, "version": v, "parent": m["version"], "buckets": new_buckets,
-              "committed_at": time.time(), "note": f"purge_tombstones<={watermark_seq}"}
-        return self._commit(m2)
 
     def advise(
         self,

@@ -10,7 +10,8 @@ Protocol per micro-batch (epoch = streaming batch_id):
    part #3) and overwrite them under _lineage/epoch=<id> (idempotent on
    retry: same epoch -> same bytes, dynamic overwrite of that epoch
    dir only);
-3. stage (canonicalize -> latest-wins dedup -> sha256) and MERGE with
+3. stage (canonicalize -> latest-wins dedup -> sha256; append-only
+   tables skip the dedup, every event is a row) and MERGE with
    the epoch and the batch digest in ``extra_manifest`` — digest +
    epoch land in the SAME atomic manifest commit as the data (the
    reference's write-checksum-after-data commit point,
@@ -25,6 +26,7 @@ Crash matrix:
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -33,6 +35,8 @@ from pyspark.sql import functions as F
 from etl_spark.cdc import replay as R
 from etl_spark.lake.table import LakeTable
 from etl_spark.sources.wal import EVENT_SCHEMA_EVOLVED, stream_event_log
+
+log = logging.getLogger(__name__)
 
 LINEAGE_SCHEMA = "epoch long, partition_id int, seq_min long, seq_max long, row_count long, sha256_digest string"
 
@@ -161,7 +165,11 @@ class CdcStream:
         operator's maintain_all compact, a catalog txn) — the retry
         rebases on the new CURRENT; the epoch fence keeps it
         exactly-once. The stream's own maintenance runs in-loop and
-        never races itself."""
+        never races itself.
+
+        On an append-only table every event is a row: the batch skips
+        every dedup, and ``salted=True`` or ``resolve="keys_first"``
+        raise here (``apply_batch``'s guard, ``replay.append_only``)."""
         self.table = table
         self.checkpoint_dir = checkpoint_dir
         self.salted = salted
@@ -173,6 +181,7 @@ class CdcStream:
         self.downstream = list(downstream or [])
         self.merge_retries = merge_retries
         self._applied_since_maintain = 0
+        self._append = R.append_only(table, salted, resolve)
 
     @property
     def lineage_dir(self) -> str:
@@ -277,11 +286,14 @@ class CdcStream:
         rows, digest = lineage_stats(can, epoch, self.lineage_ranges)
         self._write_lineage(rows, epoch)
         salted = self.salted
-        if salted == "auto":
+        if salted == "auto" and not self._append:
             # per-batch hot-key probe (keys-only sample aggregation);
             # opt-in — costs one extra tiny job per micro-batch
             salted = R.decide_salt(can)["salted"]
-        if salted:
+        if self._append:
+            # append-only fact table: every event is a row, no dedup
+            src = can if self.table.derived_columns else R.with_content_sha256(can)
+        elif salted:
             src = R.with_content_sha256(R.dedup_latest_salted(can))
         else:
             # wide-row escape hatch (resolve="keys_first"/"auto"): decide
@@ -396,7 +408,8 @@ class MaintenanceSidecar:
         self.compact_deltas_over = compact_deltas_over
         self.keep_versions = keep_versions
         self.compact_retries = compact_retries
-        self.stats = {"compactions": 0, "lost_races": 0, "expiries": 0}
+        self.stats = {"compactions": 0, "lost_races": 0, "expiries": 0, "errors": 0}
+        self.last_error: BaseException | None = None
         self._stop = None
         self._thread = None
 
@@ -422,6 +435,12 @@ class MaintenanceSidecar:
                 self.stats["lost_races"] += 1
             except FileNotFoundError:
                 pass  # manifest flipped mid-read; next tick re-reads
+            except Exception as e:  # noqa: BLE001 — a dead sidecar must not be silent
+                # anything else (a failed fold, a Py4J error) is counted,
+                # kept and logged, and the loop lives on to the next tick
+                self.stats["errors"] += 1
+                self.last_error = e
+                log.exception("maintenance sidecar tick failed on %s", self.table.root)
             self._stop.wait(self.poll_sec)
 
     def start(self) -> "MaintenanceSidecar":
@@ -436,7 +455,8 @@ class MaintenanceSidecar:
 
     def stop(self, final_sweep: bool = False, timeout_s: float = 60.0) -> dict:
         """Stop the loop (optionally one last compact+expire for a
-        bounded-depth handoff) and return the maintenance stats."""
+        bounded-depth handoff) and return the maintenance stats;
+        ``errors`` counts failed ticks (``last_error`` keeps the last)."""
         if self._thread is not None:
             self._stop.set()
             self._thread.join(timeout=timeout_s)

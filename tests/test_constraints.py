@@ -1,5 +1,5 @@
 """CHECK constraints (Delta-analog): enforcement fused into the
-post-write stats scan, abort-before-commit semantics, DDL guards.
+bucket write (one ``observe``), abort-before-commit semantics, DDL guards.
 
 Reference theme: save-time validation gates (Dataset.add asserts,
 /root/reference/lib/catalog/owid/catalog/datasets.py:99-134) — here as

@@ -352,3 +352,58 @@ def test_maintenance_sidecar_drains_stall_free(spark, wal, oracle, repos_schema,
     pd.testing.assert_frame_equal(_final(tbl), oracle, check_dtype=False)
     with pytest.raises(RuntimeError):
         MaintenanceSidecar(tbl).start().start()
+
+
+def test_stream_into_append_table_keeps_every_event(spark, repos_schema, tmp_path):
+    """An append-only table takes every event as a row through
+    CdcStream too: a WAL with repeated keys drains without dedup, and
+    the dedup knobs that would drop facts are refused up front."""
+    from etl_spark.sources.wal import EVENT_SCHEMA
+
+    wal = str(tmp_path / "wal")
+    ts = pd.Timestamp("2024-01-01").to_pydatetime()
+    for f in range(3):
+        rows = [(f * 10 + i, ts, "insert", f"r{i % 2}", "p", f"c{f}{i}", "py", f"x{i}")
+                for i in range(10)]
+        spark.createDataFrame(rows, EVENT_SCHEMA).coalesce(1).write.mode("append").parquet(wal)
+    tbl = LakeTable.create(spark, str(tmp_path / "facts"), repos_schema, ["repo", "path"],
+                           n_buckets=4, write_mode="append")
+    for kw in ({"salted": True}, {"resolve": "keys_first"}):
+        with pytest.raises(ValueError, match="append-only"):
+            CdcStream(tbl, str(tmp_path / "ckpt0"), **kw)
+    CdcStream(tbl, str(tmp_path / "ckpt"), salted="auto", resolve="auto").run_to_completion(
+        spark, wal, schema=EVENT_SCHEMA, max_files_per_trigger=1)
+    got = sorted(r["commit"] for r in tbl.read().collect())
+    assert got == sorted(f"c{f}{i}" for f in range(3) for i in range(10))
+    assert len(tbl.committed_epochs()) == 3
+
+
+def test_maintenance_sidecar_survives_and_reports_errors(spark, tmp_path, repos_schema, caplog):
+    """A maintenance tick that raises something other than a lost race
+    is counted, kept and logged, and the loop keeps running."""
+    import logging
+    import time
+
+    from etl_spark.streaming.driver import MaintenanceSidecar
+
+    tbl = LakeTable.create(spark, str(tmp_path / "repos"), repos_schema,
+                           ["repo", "path"], n_buckets=2, write_mode="mor")
+    calls = {"n": 0}
+
+    def broken_compact():
+        calls["n"] += 1
+        raise RuntimeError("fold failed")
+
+    tbl.compact = broken_compact
+    side = MaintenanceSidecar(tbl, poll_sec=0.02, compact_deltas_over=-1)
+    with caplog.at_level(logging.ERROR, logger="etl_spark.streaming.driver"):
+        side.start()
+        deadline = time.time() + 30
+        while calls["n"] < 3 and time.time() < deadline:
+            time.sleep(0.02)
+        alive = side._thread.is_alive()
+        stats = side.stop()
+    assert alive
+    assert stats["errors"] >= 3 and stats["compactions"] == 0
+    assert isinstance(side.last_error, RuntimeError)
+    assert "maintenance sidecar tick failed" in caplog.text
